@@ -14,7 +14,7 @@ The reference gets this for free because Postgres NUMERIC is exact
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, WindowSpec
 from pyspark.sql import functions as F
 
 # DECIMAL(18,s) sums expand to DECIMAL(38,s) internally in Spark —
@@ -28,10 +28,16 @@ def dsum(col: Column | str, scale: int = 2, precision: int = 18) -> Column:
     return F.sum(c.cast(f"decimal({precision},{scale})")).cast("double")
 
 
-def davg(col: Column | str, scale: int = 2, precision: int = 18) -> Column:
-    """Order-independent AVG: exact decimal sum, one double divide."""
+def davg(
+    col: Column | str, scale: int = 2, precision: int = 18, over: WindowSpec | None = None
+) -> Column:
+    """Order-independent AVG: exact decimal sum, one double divide.
+    With ``over``, both the sum and the count run over that window."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(f"decimal({precision},{scale})")).cast("double") / F.count(c)
+    total, n = F.sum(c.cast(f"decimal({precision},{scale})")), F.count(c)
+    if over is not None:
+        total, n = total.over(over), n.over(over)
+    return total.cast("double") / n
 
 
 def with_share_of_total(df, cnt_col: str, out: str = "pct", ndigits: int | None = None):

@@ -24,18 +24,29 @@ Incremental semantics (the reference's, re-expressed):
 - Indicators need full per-symbol history (every window/EWM runs
   over the whole series, like the reference's per-symbol loops), so
   work symbols recompute their entire series and UPSERT by
-  (symbol_id, date); untouched symbols' rows are carried by the
-  upsert's key-join — ∝ work, not ∝ market.
-- Signals upsert by (symbol_id, date, trade_strategy).
+  (symbol_id, date). The COMPUTE is ∝ work; the WRITE is not: both
+  feature tables are unpartitioned, so each upsert reads and
+  rewrites the whole table (untouched symbols' rows are carried
+  through the merge) — ∝ market. A ``symbol_bucket`` layout with a
+  partition-scoped upsert (``TableIO.upsert(partition_by=...)``)
+  would bound the rewrite by the work symbols' buckets.
+- Signals upsert by (symbol_id, date, trade_strategy), computed from
+  the same materialized indicator batch the feature upsert wrote.
 - Screener + chart input are market-wide ranks (they must see every
   symbol, stale or not — a percentile rank over a subset is wrong),
   so they always recompute, reading the sf_dir tables their oracles
-  read; outputs land in the warehouse like any transform.
+  read; outputs land in the warehouse like any transform. The rank
+  pipeline runs once: its 25 picks feed both outputs.
+
+Each frame is computed once and no table is re-read to count it:
+stage row counts are the counts the writes return (from the written
+files' footers), and the unprocessed-bar count is the feature table's
+growth across its upsert.
 
 At 100 TB: the ledger is one row per symbol×group (broadcast
-always); the upserts shuffle only the work symbols' recomputed rows;
-the screener's rank pipeline is the two-phase distributed total
-order proven in `queries/reporting.py`.
+always; the work ids are collected into a local relation, bounded
+by the symbol universe); the screener's rank pipeline is the
+two-phase distributed total order proven in `queries/reporting.py`.
 """
 
 from __future__ import annotations
@@ -44,11 +55,11 @@ import time
 from dataclasses import dataclass, field
 from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.io import TableIO
-from .watermarks import WatermarkLedger, discover_unprocessed
+from .watermarks import WatermarkLedger
 
 RAW_BARS = "raw/time_series_daily_adjusted"
 T_FEATURES = "transforms/time_series_daily_adjusted"
@@ -125,7 +136,7 @@ def run_daily_market(
     from ..domain.indicators import compute_indicators
     from ..domain.trading_signals import all_signals
     from ..queries.fin_domain import market_bars
-    from ..queries.reporting import daily_screener, top25_chart_input
+    from ..queries.reporting import _screener_top25, chart_input_for_picks
     from .pipeline import consistency_check
 
     rep = DailyRunReport()
@@ -134,29 +145,20 @@ def run_daily_market(
 
     # ---- stage 1: ingest (feed → raw bars; the extract stand-in) ----
     with _staged(rep, "ingest") as st:
-        bars = market_bars(spark, sf_dir)
-        io.overwrite(bars, RAW_BARS)
+        st.done(io.overwrite(market_bars(spark, sf_dir), RAW_BARS))
         raw = io.read(RAW_BARS)
-        st.done(raw.count())
 
     # ---- stage 2: discovery (ledger: eligible, stale, under cap) ----
     with _staged(rep, "discovery") as st:
         ledger.ensure_rows(raw.select("symbol_id"), GROUP)
         work = ledger.select_work(GROUP, staleness_hours=staleness_hours, now=now)
-        # the ledger is one row per symbol×group — a driver-side
-        # count here is bounded by the symbol universe, not the data
-        work_ids = work.select("symbol_id")
-        rep.work_symbols = work_ids.count()
+        # the ledger is one row per symbol×group — collecting the work
+        # ids is bounded by the symbol universe, not the data
+        ids = [(r.symbol_id,) for r in work.select("symbol_id").collect()]
+        rep.work_symbols = len(ids)
+        work_ids = spark.createDataFrame(ids, "symbol_id long")
         bars_work = raw.join(F.broadcast(work_ids), "symbol_id", "semi")
-        done = (
-            io.read(T_FEATURES).select("symbol_id", "date")
-            if io.exists(T_FEATURES)
-            else raw.select("symbol_id", "date").limit(0)
-        )
-        rep.new_bar_rows = discover_unprocessed(
-            bars_work, done, ["symbol_id", "date"]
-        ).count()
-        st.done(rep.work_symbols, note=f"{rep.new_bar_rows} unprocessed bar rows")
+        st.done(rep.work_symbols)
 
     # ---- stage 3+4: indicators → signals over the work set ----
     if rep.work_symbols == 0:
@@ -164,32 +166,39 @@ def run_daily_market(
         rep.stages.append(StageRecord("signals", 0.0, 0, "skipped: no stale symbols"))
     else:
         with _staged(rep, "indicators") as st:
-            feats = compute_indicators(bars_work).withColumn(
-                "processed_at", F.current_timestamp()
+            # materialized once: the feature upsert, the signals and
+            # the ledger ranges all read this batch, so the EWM island
+            # runs once per refresh
+            feats = (
+                compute_indicators(bars_work)
+                .withColumn("processed_at", F.current_timestamp())
+                .localCheckpoint()
             )
-            io.upsert(feats, T_FEATURES, ["symbol_id", "date"])
-            st.done(io.read(T_FEATURES).count())
+            # (symbol_id, date) is unique in the table and in the
+            # batch, so the table grows by exactly the bars it lacked
+            held = io.count_rows(T_FEATURES)
+            rows = io.upsert(feats, T_FEATURES, ["symbol_id", "date"])
+            rep.new_bar_rows = rows - held
+            st.done(rows, note=f"{rep.new_bar_rows} unprocessed bar rows")
         with _staged(rep, "signals") as st:
-            sig = all_signals(io.read(T_FEATURES).join(
-                F.broadcast(work_ids), "symbol_id", "semi"
-            )).withColumn("processed_at", F.current_timestamp())
-            io.upsert(sig, T_SIGNALS, ["symbol_id", "date", "trade_strategy"])
-            st.done(io.read(T_SIGNALS).count())
+            sig = all_signals(feats).withColumn("processed_at", F.current_timestamp())
+            st.done(io.upsert(sig, T_SIGNALS, ["symbol_id", "date", "trade_strategy"]))
 
-    # ---- stage 5: screener (market-wide rank — always recomputes) ----
-    with _staged(rep, "screener") as st:
-        io.overwrite(daily_screener(spark, sf_dir), T_SCREENER)
-        st.done(io.read(T_SCREENER).count())
-
-    # ---- stage 6: chart input for the picks ----
-    with _staged(rep, "chart_input") as st:
-        io.overwrite(top25_chart_input(spark, sf_dir), T_CHART)
-        st.done(io.read(T_CHART).count())
+    # ---- stage 5+6: screener (market-wide rank — always recomputes)
+    # and the chart input for its picks, from ONE rank pipeline ----
+    picks = _screener_top25(spark, sf_dir).persist()
+    try:
+        with _staged(rep, "screener") as st:
+            st.done(io.overwrite(picks.drop("pick_key"), T_SCREENER))
+        with _staged(rep, "chart_input") as st:
+            st.done(io.overwrite(chart_input_for_picks(spark, sf_dir, picks), T_CHART))
+    finally:
+        picks.unpersist()
 
     # ---- stage 7: ledger commit (per-symbol processed ranges) ----
     with _staged(rep, "commit") as st:
         if rep.work_symbols:
-            ranges = bars_work.groupBy("symbol_id").agg(
+            ranges = feats.groupBy("symbol_id").agg(
                 F.min("date").alias("first_date"), F.max("date").alias("last_date")
             )
             ledger.commit_success(GROUP, ranges, now=now)

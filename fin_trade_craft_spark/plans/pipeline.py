@@ -42,8 +42,9 @@ class TransformResult:
 class TransformPipeline:
     """Registry + runner. Transforms are (name, fn) where fn takes
     the TableIO and returns the output DataFrame; the runner
-    persists it to ``transforms/<name>`` and records row counts —
-    the analog of the reference's per-script exit codes."""
+    persists it to ``transforms/<name>`` and records the row count
+    its write returns (no re-read) — the analog of the reference's
+    per-script exit codes."""
 
     io: TableIO
     groups: dict[str, list[tuple[str, Callable[[TableIO], DataFrame]]]] = field(default_factory=dict)
@@ -76,10 +77,8 @@ class TransformPipeline:
                 try:
                     out = fn(self.io)
                     out = out.withColumn("processed_at", F.current_timestamp())
-                    self.io.overwrite(out, f"transforms/{name}")
-                    results.append(
-                        TransformResult(group, name, True, self.io.read(f"transforms/{name}").count())
-                    )
+                    rows = self.io.overwrite(out, f"transforms/{name}")
+                    results.append(TransformResult(group, name, True, rows))
                 except Exception as e:  # failure isolation per transform
                     results.append(TransformResult(group, name, False, 0, str(e)[:500]))
         return results

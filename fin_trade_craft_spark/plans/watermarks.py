@@ -72,6 +72,8 @@ class WatermarkLedger:
         )
         existing = self.read().filter(F.col("transform_group") == group).select("symbol_id")
         new = seed.join(existing, "symbol_id", "left_anti")
+        if new.isEmpty():
+            return  # the daily steady state: no ledger rewrite
         # upsert keeps non-colliding old rows itself — passing the
         # whole ledger back in would scan it twice more for nothing
         self.io.upsert(new, self.table, ["symbol_id", "transform_group"])

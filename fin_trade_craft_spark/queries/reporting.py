@@ -25,7 +25,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.exact import dsum
+from ..functions.exact import davg, dsum
 from ..operators.total_order import global_percent_rank
 from ..sources.catalog import load_table
 
@@ -437,44 +437,53 @@ def top25_chart_input(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal_date; here the orders and events calendars are disjoint
     synthetic domains, so the window anchors at each symbol's own
     latest bar — the same "last N bars before the chart's right
-    edge" shape.
+    edge" shape. The extraction itself is ``chart_input_for_picks``.
+
+    The picks frame feeds TWO consumers (the bar semi-join's
+    broadcast build and the final header join) — persist + pin so
+    the screener's rank pipeline runs once, not twice (the r07
+    shared-branch discipline; the frame is 25 rows)."""
+    from ..operators.pinning import pin_on_first_action
+
+    picks = _screener_top25(spark, sf_dir).persist()
+    return pin_on_first_action(chart_input_for_picks(spark, sf_dir, picks), [picks])
+
+
+def chart_input_for_picks(spark: SparkSession, sf_dir: str, picks: DataFrame) -> DataFrame:
+    """``top25_chart_input`` over an already-built ``_screener_top25``
+    frame, so a caller that also writes the screener runs the rank
+    pipeline once.
+
+    Picks carry the customer KEY from the screener core — joining
+    back on the displayed name is wrong: names need not be unique
+    (the scale replicas repeat base customers under offset keys), so
+    a name join fans each pick across its clones (25 → 250 rows at
+    the sf1 replica).
 
     Scale notes: the pick list is 25 rows — it broadcasts into the
     events scan, so the bar pipeline aggregates ONLY the picked
     symbols' ticks (predicate reaches the scan as a semi-join /
     DPP-able filter; nothing market-wide shuffles). The latest-N
     rank and both moving averages are per-symbol windows over ≤N
-    bars × 25 symbols. The final frame is ≤ 25·(N+1) rows — chart
-    payload, not data volume."""
-    from .fin_domain import ohlcv_resample
-
-    # picks carry the customer KEY from the screener core — joining
-    # back on the displayed name is wrong: names need not be unique
-    # (the scale replicas repeat base customers under offset keys),
-    # so a name join fans each pick across its clones (25 → 250 rows
-    # at the sf1 replica). The frame feeds TWO consumers (the bar
-    # semi-join's broadcast build and the final header join) —
-    # persist + pin so the screener's rank pipeline runs once, not
-    # twice (the r07 shared-branch discipline; the frame is 25 rows).
-    from ..operators.pinning import pin_on_first_action
-
-    picks = (
-        _screener_top25(spark, sf_dir)
-        .select(
-            "pick_key",
-            "symbol",
-            "signal_date",
-            "trade_strategy",
-            "success_probability",
-            "signal_strength",
-            "overall_quality_score",
-            "composite_score",
-            "sector",
-        )
-        .persist()
-    )
+    bars × 25 symbols; the averages are exact-decimal (``davg``),
+    so they do not depend on summation order. The final frame is
+    ≤ 25·(N+1) rows — chart payload, not data volume."""
     from pyspark.sql import Window
 
+    from .fin_domain import ohlcv_resample
+
+    header = [
+        "pick_key",
+        "symbol",
+        "signal_date",
+        "trade_strategy",
+        "success_probability",
+        "signal_strength",
+        "overall_quality_score",
+        "composite_score",
+        "sector",
+    ]
+    picks = picks.select(*header)
     bars = ohlcv_resample(spark, sf_dir).join(
         F.broadcast(picks.select(F.col("pick_key").alias("user_id"))), "user_id", "semi"
     )
@@ -494,25 +503,17 @@ def top25_chart_input(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("volume").cast("bigint").alias("volume"),
         F.when(
             F.count(F.lit(1)).over(w20) == CHART_MA_SHORT,
-            F.avg("close").over(w20),
+            davg("close", over=w20),
         ).alias("ma20"),
         F.when(
             F.count(F.lit(1)).over(w50) == CHART_MA_LONG,
-            F.avg("close").over(w50),
+            davg("close", over=w50),
         ).alias("ma50"),
     )
-    result = (
+    return (
         picks.join(overlay, picks["pick_key"] == overlay["user_id"], "left")
         .select(
-            "pick_key",
-            "symbol",
-            "signal_date",
-            "trade_strategy",
-            "success_probability",
-            "signal_strength",
-            "overall_quality_score",
-            "composite_score",
-            "sector",
+            *header,
             "date",
             "open",
             "high",
@@ -530,7 +531,6 @@ def top25_chart_input(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("symbol", "pick_key", "date")
         .drop("pick_key")
     )
-    return pin_on_first_action(result, [picks])
 
 
 ORACLE_TOP25_CHART_INPUT = f"""
@@ -591,9 +591,11 @@ WITH per AS (
 ), overlay AS (
   SELECT user_id, date, open, high, low, close, volume,
     CASE WHEN COUNT(*) OVER w20 = {CHART_MA_SHORT}
-         THEN AVG(close) OVER w20 END AS ma20,
+         THEN CAST(SUM(CAST(close AS DECIMAL(18,2))) OVER w20 AS DOUBLE)
+              / COUNT(close) OVER w20 END AS ma20,
     CASE WHEN COUNT(*) OVER w50 = {CHART_MA_LONG}
-         THEN AVG(close) OVER w50 END AS ma50
+         THEN CAST(SUM(CAST(close AS DECIMAL(18,2))) OVER w50 AS DOUBLE)
+              / COUNT(close) OVER w50 END AS ma50
   FROM latest
   WINDOW
     w20 AS (PARTITION BY user_id ORDER BY date

@@ -9,7 +9,8 @@ replace (S8), CTAS (S9), ALTER ADD COLUMN (S10), UPDATE-by-key
 - overwrite       → ``mode("overwrite")`` (CTAS)
 - replace_where   → dynamic partition overwrite of the matching
                     partition keys (the delete+insert idiom)
-- upsert          → anti-join old rows on the natural key + union +
+- upsert          → tagged ``old ∪ new`` where a key's new rows replace
+                    its old ones (one per-key window over the union) +
                     rewrite (Delta MERGE semantics on plain parquet).
                     With ``partition_by``, the rewrite is PARTITION-
                     SCOPED: only partitions present in the incoming
@@ -37,6 +38,19 @@ at cluster scale, and on object stores rename is a copy, which is
 why those formats commit via manifest, not rename). Single writer
 per table by contract, as in the reference's job scheduler.
 
+Every write returns the rows it wrote: ``overwrite``, ``append``,
+``replace_where`` and ``upsert`` (the rewrite: the whole table
+unpartitioned, the touched partitions when partition-scoped). The
+count is summed from the parquet footers of the part files the write
+produced — footer metadata only, no re-read and no Spark job.
+``count_rows`` reads a table's count the same way, and ``exists``
+answers from the directory listing alone. (``DataFrame.observe`` with
+an ``Observation`` would count on the plan instead, but on Spark
+4.1.2 it leaves the session's ObservationManager initialized, and
+that field is not serializable: every later task that captures the
+session — a fitted LogisticRegressionModel's transform does — then
+fails with "Task not serializable".)
+
 Layout guidance (SURVEY §4.2.5): facts partitioned by a bucket of
 the entity key (``symbol_bucket = hash(symbol_id) % N``), sorted
 within partitions by date; dims unpartitioned.
@@ -44,8 +58,62 @@ within partitions by date; dims unpartitioned.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import functools
+import operator
+import os
+from collections.abc import Iterable, Iterator
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+_SRC, _NEWEST = "__merge_src", "__merge_newest"
+
+
+def _hidden(name: str) -> bool:
+    """Spark's data-file filter: ``.x`` and ``_x`` are not data, except
+    a ``_col=v`` partition directory."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _data_files(path: str) -> Iterator[str]:
+    """The visible data files anywhere under ``path`` (partition
+    subdirectories included). A listing error propagates."""
+    if not os.path.exists(path):
+        return
+
+    def fail(err: OSError) -> None:
+        raise err
+
+    for root, dirs, files in os.walk(path, onerror=fail):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        yield from (os.path.join(root, f) for f in files if not _hidden(f))
+
+
+def _footer_rows(files: Iterable[str]) -> int:
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in files)
+
+
+def _merge(old: DataFrame, new: DataFrame, keys: list[str]) -> DataFrame:
+    """MERGE ``new`` into ``old`` on ``keys``: every key with a row in
+    ``new`` keeps exactly its ``new`` rows (duplicates included), every
+    other key keeps its ``old`` rows. A NULL in any key collides with
+    nothing, as in an equi-join. Columns are ``old``'s followed by the
+    ones only ``new`` has (``unionByName(allowMissingColumns=True)``).
+
+    ``new`` appears once in the plan, so the batch is evaluated once."""
+    tagged = old.withColumn(_SRC, F.lit(0)).unionByName(
+        new.withColumn(_SRC, F.lit(1)), allowMissingColumns=True
+    )
+    w = Window.partitionBy(*keys)
+    src = F.col(_SRC)
+    lone = functools.reduce(operator.or_, [F.col(k).isNull() for k in keys])
+    return (
+        tagged.withColumn(_NEWEST, F.when(lone, src).otherwise(F.max(src).over(w)))
+        .filter(src == F.col(_NEWEST))
+        .drop(_SRC, _NEWEST)
+    )
 
 
 class TableIO:
@@ -63,29 +131,21 @@ class TableIO:
         return f"{self.warehouse}/{table.replace('.', '/')}"
 
     def exists(self, table: str) -> bool:
-        from pyspark.errors import AnalysisException
+        """A table exists when a visible data file sits anywhere under
+        its directory (partition subdirectories included) — answered
+        from the listing, without a Spark job. A missing or EMPTY
+        directory (a crash after mkdir, before any part file landed)
+        is "no table": both are recoverable absent-table states. A
+        listing error propagates: swallowing it would send upsert()
+        down the overwrite path and destroy the existing table with
+        just the incoming batch. A corrupt footer is not looked for
+        here; it fails loudly at the read that follows."""
+        return next(_data_files(self.path(table)), None) is not None
 
-        try:
-            self.spark.read.parquet(self.path(table)).schema
-            return True
-        except AnalysisException as e:
-            # Path-missing means "no table"; so does an EMPTY directory
-            # (UNABLE_TO_INFER_SCHEMA — e.g. a crash after mkdir but
-            # before any part file landed in a non-swap write path):
-            # both are recoverable absent-table states. Anything else —
-            # a transient FS error or corrupt footer — must propagate:
-            # swallowing it would send upsert() down the overwrite path
-            # and destroy the existing table with just the incoming
-            # batch.
-            msg = str(e)
-            if (
-                "PATH_NOT_FOUND" in msg
-                or "Path does not exist" in msg
-                or "UNABLE_TO_INFER_SCHEMA" in msg
-                or "Unable to infer schema" in msg
-            ):
-                return False
-            raise
+    def count_rows(self, table: str) -> int:
+        """Rows in ``table`` (0 if absent), summed from its parquet
+        footers — no Spark job."""
+        return _footer_rows(_data_files(self.path(table)))
 
     def read(self, table: str) -> DataFrame:
         return self.spark.read.parquet(self.path(table))
@@ -107,7 +167,6 @@ class TableIO:
         second rename lands. A caller whose scan then races a LATER
         swap gets the loud missing-file error and simply re-creates
         the frame."""
-        import os
         import time as _time
 
         final, tmp, old = self._swap_paths(table)
@@ -119,34 +178,40 @@ class TableIO:
             _time.sleep(wait)
         return self.read(table)  # raises the standard path-not-found
 
-    def overwrite(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
+    def _write(
+        self, df: DataFrame, path: str, mode: str = "overwrite",
+        partition_by: list[str] | None = None, **options: str,
+    ) -> int:
+        """Write ``df`` as parquet; returns the rows written, from the
+        footers of the part files this write added (every write job
+        names its files uniquely, so they are the files not listed
+        before it)."""
+        before = set(_data_files(path))
+        w = df.write.mode(mode).options(**options)
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(path)
+        return _footer_rows(set(_data_files(path)) - before)
+
+    def overwrite(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> int:
         if self.retain_history > 0 and self.exists(table):
             # versioned CTAS: route through the commit protocol so
             # the replaced image is retained like any other rewrite
-            self._stage_and_swap(df, table, partition_by)
-            return
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.path(table))
+            return self._stage_and_swap(df, table, partition_by)
+        return self._write(df, self.path(table), "overwrite", partition_by)
 
-    def append(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
-        w = df.write.mode("append")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.path(table))
+    def append(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> int:
+        return self._write(df, self.path(table), "append", partition_by)
 
-    def replace_where(self, df: DataFrame, table: str, partition_by: list[str]) -> None:
+    def replace_where(self, df: DataFrame, table: str, partition_by: list[str]) -> int:
         """Partition replace (S8): overwrite ONLY the partitions
         present in ``df`` — the delete-symbol-then-insert idiom.
-        Requires the table to be partitioned by ``partition_by``."""
-        conf = "spark.sql.sources.partitionOverwriteMode"
-        old = self.spark.conf.get(conf, "static")
-        self.spark.conf.set(conf, "dynamic")
-        try:
-            df.write.mode("overwrite").partitionBy(*partition_by).parquet(self.path(table))
-        finally:
-            self.spark.conf.set(conf, old)
+        Requires the table to be partitioned by ``partition_by``.
+        Dynamic overwrite is a per-write option: the session conf is
+        never touched."""
+        return self._write(
+            df, self.path(table), "overwrite", partition_by, partitionOverwriteMode="dynamic"
+        )
 
     def _tmp_path(self, table: str) -> str:
         import uuid
@@ -166,32 +231,27 @@ class TableIO:
         p = self.path(table)
         return p, f"{p}.__swap_tmp", f"{p}.__swap_old"
 
-    def _stage_and_swap(self, df: DataFrame, table: str, partition_by: list[str] | None) -> None:
+    def _stage_and_swap(self, df: DataFrame, table: str, partition_by: list[str] | None) -> int:
         """Write ``df`` (whose plan reads ``table``) to a staging dir,
         then commit by two atomic directory renames (see module
         docstring). A crash mid-protocol is recoverable from the
-        on-disk state alone via ``recover_table``."""
-        import os
-
+        on-disk state alone via ``recover_table``. Returns the rows
+        written."""
         final, tmp, old = self._swap_paths(table)
         self._rm(tmp)
         self._rm(old)
         try:
-            w = df.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(tmp)
+            rows = self._write(df, tmp, "overwrite", partition_by)
         except Exception:
             self._rm(tmp)  # failed stage: live table never touched
             raise
         self._commit_staged_dir(table, tmp)
+        return rows
 
     def _commit_staged_dir(self, table: str, tmp: str) -> None:
         """Atomically promote a KNOWN-COMPLETE staged directory to be
         the live table (the commit half of the swap protocol): the
         live table is only ever absent between the two renames."""
-        import os
-
         final, swap_tmp, old = self._swap_paths(table)
         if tmp != swap_tmp:
             # normalize onto the fixed swap path so recover_table can
@@ -213,8 +273,6 @@ class TableIO:
         it as a history version when retention is configured (a crash
         inside the commit window must not silently cost a history
         entry the caller asked for), else remove it."""
-        import os
-
         if self.retain_history > 0 and os.path.exists(old):
             os.makedirs(self._hist_dir(table), exist_ok=True)
             os.rename(old, f"{self._hist_dir(table)}/v{self._next_version(table):08d}")
@@ -255,7 +313,6 @@ class TableIO:
         — see SURVEY's documented divergence #2).
         """
         import glob
-        import os
 
         swept = False
         for stale in glob.glob(f"{self.path(table)}__rewrite_tmp_*"):
@@ -282,9 +339,12 @@ class TableIO:
             status = "cleaned" if status == "ok" else status
         return "cleaned" if status == "ok" and swept else status
 
-    def upsert(self, df: DataFrame, table: str, keys: list[str], partition_by: list[str] | None = None) -> None:
+    def upsert(
+        self, df: DataFrame, table: str, keys: list[str], partition_by: list[str] | None = None
+    ) -> int:
         """S7: new rows win on the natural key (ON CONFLICT DO
-        UPDATE). Anti-join keeps non-colliding old rows.
+        UPDATE); see ``_merge`` for the exact semantics. Returns the
+        rows written.
 
         Unpartitioned tables require a full rewrite (Delta MERGE
         would be in-place). When ``partition_by`` is given, the
@@ -296,15 +356,12 @@ class TableIO:
         per key (a key cannot move between partitions), which holds
         for the reference's layouts (partition = f(entity key))."""
         if not self.exists(table):
-            self.overwrite(df, table, partition_by)
-            return
+            return self.overwrite(df, table, partition_by)
+        old = self.read(table)
         if partition_by:
-            import functools
-            import operator
-
             parts = [tuple(r) for r in df.select(*partition_by).distinct().collect()]
             if not parts:
-                return  # empty batch: nothing to merge, nothing to touch
+                return 0  # empty batch: nothing to merge, nothing to touch
             pred = functools.reduce(
                 operator.or_,
                 [
@@ -315,20 +372,17 @@ class TableIO:
                     for row in parts
                 ],
             )
-            old_in_scope = self.read(table).filter(pred)
-            kept = old_in_scope.join(df.select(*keys).distinct(), keys, "left_anti")
-            merged = kept.unionByName(df, allowMissingColumns=True)
-            tmp = self._tmp_path(table)
-            try:
-                merged.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
-                self.replace_where(self.spark.read.parquet(tmp), table, partition_by)
-            finally:
-                self._rm(tmp)
-            return
-        old = self.read(table)
-        kept = old.join(df.select(*keys).distinct(), keys, "left_anti")
-        merged = kept.unionByName(df, allowMissingColumns=True)
-        self._stage_and_swap(merged, table, partition_by)
+            old = old.filter(pred)
+        merged = _merge(old, df, keys)
+        if not partition_by:
+            return self._stage_and_swap(merged, table, None)
+        tmp = self._tmp_path(table)
+        try:
+            rows = self._write(merged, tmp, "overwrite", partition_by)
+            self.replace_where(self.spark.read.parquet(tmp), table, partition_by)
+        finally:
+            self._rm(tmp)
+        return rows
 
     def with_symbol_bucket(self, df: DataFrame, key: str = "symbol_id", n_buckets: int = 64) -> DataFrame:
         """Deterministic bucket column for partition layout."""
@@ -362,11 +416,8 @@ class TableIO:
         count aggregates as queries/reporting.expectation_report."""
         staged_path = self._tmp_path(table)
         try:
-            w = df.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(staged_path)
-            staged = self.spark.read.parquet(staged_path)
+            self._write(df, staged_path, "overwrite", partition_by)
+            staged =self.spark.read.parquet(staged_path)
             results = [(name, bool(fn(staged))) for name, fn in checks]
             failed = [name for name, ok in results if not ok]
             if failed:
@@ -382,8 +433,6 @@ class TableIO:
         return f"{self.path(table)}.__hist"
 
     def _versions(self, table: str) -> list[int]:
-        import os
-
         hd = self._hist_dir(table)
         if not os.path.isdir(hd):
             return []
@@ -400,8 +449,6 @@ class TableIO:
         without the marker, vacuuming all history would restart ids
         at 1 and a stale 'version 1' reference would silently
         resolve to a different table image."""
-        import os
-
         vs = self._versions(table)
         seen = vs[-1] if vs else 0
         if os.path.exists(self._seq_path(table)):
@@ -427,8 +474,6 @@ class TableIO:
 
     def read_version(self, table: str, version: int) -> DataFrame:
         """Time-travel read of a retained pre-image (VERSION AS OF)."""
-        import os
-
         p = f"{self._hist_dir(table)}/v{version:08d}"
         if not os.path.isdir(p):
             raise FileNotFoundError(

@@ -139,3 +139,26 @@ def test_ahash_payload_matches_operator(spark):
     for did, raw in payloads:
         assert ahash_payload(bytes(raw)) == via_op[did]
     assert ahash_payload(b"not a png") is None
+
+
+@pytest.mark.parametrize("sf,seed", [(0.01, 4), (0.001, 1)])
+def test_chart_input_moving_averages_exact_on_generated_tables(spark, tmp_path, sf, seed):
+    """ma20/ma50 are exact-decimal averages on both sides: on these
+    generated tables a double AVG differed from DuckDB's AVG by 1-2 ulp
+    (the two engines sum the window in different orders)."""
+    import duckdb
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "perfbench"))
+    import datagen
+
+    data = str(tmp_path / "data")
+    datagen.generate(data, sf, seed)
+    sdf = reporting.top25_chart_input(spark, data).toPandas()
+    con = duckdb.connect()
+    for t in ("orders", "customer", "nation", "events"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{data}/{t}.parquet'")
+    odf = con.execute(reporting.ORACLE_TOP25_CHART_INPUT).df()
+    con.close()
+    assert sdf["ma20"].notna().any()  # (no pick has the 50 bars ma50 needs here)
+    ok, msg = compare(sdf, odf)
+    assert ok, msg

@@ -370,3 +370,164 @@ def test_version_ids_survive_vacuum(spark, tmp_path):
     except FileNotFoundError:
         pass
     assert [r.s for r in io.read_version("t", 2).collect()] == ["A"]
+
+
+def test_exists_reads_the_directory_not_spark(spark, tmp_path):
+    """exists() answers from the listing: a missing or empty directory,
+    or one holding only hidden files, is no table; a partitioned table
+    (data files only in subdirectories) is one — and asking launches
+    no Spark job."""
+    import pathlib
+
+    io = TableIO(spark, str(tmp_path))
+    sc = spark.sparkContext
+    sc.setJobGroup("exists-probe", "exists")
+    try:
+        assert io.exists("missing") is False
+        pathlib.Path(io.path("empty")).mkdir(parents=True)
+        assert io.exists("empty") is False
+        hidden = pathlib.Path(io.path("hidden"))
+        (hidden / "_temporary" / "0").mkdir(parents=True)
+        (hidden / "_temporary" / "0" / "part-0.parquet").write_bytes(b"x")
+        (hidden / "_SUCCESS").write_bytes(b"")
+        (hidden / ".part-0.parquet.crc").write_bytes(b"")
+        assert io.exists("hidden") is False
+        jobs_before = len(sc.statusTracker().getJobIdsForGroup("exists-probe"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs_before == 0
+
+    io.overwrite(spark.createDataFrame([(1, 10), (2, 20)], "sym int, v int"), "part", partition_by=["sym"])
+    assert not any(p.is_file() and p.suffix == ".parquet" for p in pathlib.Path(io.path("part")).iterdir())
+    sc.setJobGroup("exists-probe-2", "exists")
+    try:
+        assert io.exists("part") is True
+        assert sc.statusTracker().getJobIdsForGroup("exists-probe-2") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_write_counts_equal_table_counts(spark, io):
+    """Every write returns the rows it wrote, from the written files'
+    footers: overwrite/upsert (whole-table rewrites) equal
+    read().count(); append and replace_where return the rows they
+    added/placed; count_rows equals read().count()."""
+    base = spark.createDataFrame([(i, i % 3, "a") for i in range(10)], "k int, p int, v string")
+    assert io.overwrite(base, "t/c") == io.read("t/c").count() == 10
+    assert io.overwrite(base.filter("k < 0"), "t/c") == io.read("t/c").count() == 0
+    io.overwrite(base, "t/c")
+    assert io.append(base.filter("k < 4"), "t/c") == 4
+    assert io.read("t/c").count() == 14
+    batch = spark.createDataFrame([(1, 1, "b"), (20, 2, "b"), (21, 0, "b")], "k int, p int, v string")
+    # k=1 replaces both of its rows (the base row + its appended copy)
+    assert io.upsert(batch, "t/c", ["k"]) == io.read("t/c").count() == 14 - 2 + 3
+    assert io.count_rows("t/c") == 15
+    assert io.upsert(batch, "t/new", ["k"]) == 3  # absent table: the batch
+    assert io.count_rows("t/absent") == 0
+
+    io.overwrite(base, "t/pc", partition_by=["p"])
+    assert io.replace_where(batch.filter("p = 1"), "t/pc", ["p"]) == 1
+    assert io.read("t/pc").count() == io.count_rows("t/pc") == 1 + base.filter("p != 1").count()
+
+
+def test_writes_leave_session_conf_unchanged(spark, io):
+    """replace_where (and the partition-scoped upsert that commits
+    through it) use a per-write dynamic-overwrite option; the
+    session's partitionOverwriteMode stays STATIC throughout."""
+    before = dict(spark.conf.getAll)
+    df = spark.createDataFrame([(1, 10, "x"), (2, 20, "x")], "sym int, d int, v string")
+    io.overwrite(df, "t/hyg", partition_by=["sym"])
+    io.replace_where(spark.createDataFrame([(1, 11, "y")], "sym int, d int, v string"), "t/hyg", ["sym"])
+    # dynamic semantics: sym=2 untouched
+    assert sorted(map(tuple, io.read("t/hyg").collect())) == [(11, "y", 1), (20, "x", 2)]
+    io.upsert(spark.createDataFrame([(2, 21, "z")], "sym int, d int, v string"), "t/hyg", ["sym", "d"], ["sym"])
+    assert sorted(map(tuple, io.read("t/hyg").collect())) == [(11, "y", 1), (20, "x", 2), (21, "z", 2)]
+    assert dict(spark.conf.getAll) == before
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode").upper() == "STATIC"
+
+
+def _anti_join_upsert(old, new, keys):
+    """The previous upsert definition, kept as the differential's
+    reference: anti-join old rows on the batch's key set, then union."""
+    kept = old.join(new.select(*keys).distinct(), keys, "left_anti")
+    return kept.unionByName(new, allowMissingColumns=True)
+
+
+def _by_name(rows):
+    return sorted((sorted(r.asDict().items()) for r in rows), key=repr)
+
+
+@pytest.mark.parametrize("partitioned", [False, True], ids=["unpartitioned", "partition_scoped"])
+def test_upsert_matches_anti_join_union(spark, io, partitioned):
+    """The one-pass merge equals the anti-join+union definition on
+    duplicate batch keys, duplicate old keys, NULL keys (which never
+    collide), and batches that add and drop columns."""
+    keys = ["p", "k"]
+    old = spark.createDataFrame(
+        [
+            (1, 1, "old", 1.0),
+            (1, 2, "old", 2.0),
+            (1, 5, "old-a", 5.0),
+            (1, 5, "old-b", 5.5),  # duplicate old key, untouched by the batch
+            (1, 6, "old-a", 6.0),
+            (1, 6, "old-b", 6.5),  # duplicate old key, replaced by the batch
+            (1, None, "old-null", 0.0),
+            (2, 7, "old", 7.0),
+        ],
+        "p int, k int, v string, w double",
+    )
+    new = spark.createDataFrame(
+        [
+            (1, 2, "new-a", 10),
+            (1, 2, "new-b", 11),  # duplicate batch key: both survive
+            (1, 3, "new", 12),
+            (1, 6, "new", 13),
+            (1, None, "new-null", 14),  # NULL key: collides with nothing
+        ],
+        "p int, k int, v string, x int",  # drops w, adds x
+    )
+    part = ["p"] if partitioned else None
+    io.overwrite(old, "t/m", partition_by=part)
+    cur = io.read("t/m")
+    expected = _anti_join_upsert(cur, new, keys)
+    exp_cols = expected.columns
+    exp_rows = sorted(expected.collect(), key=repr)
+
+    got = io.upsert(new, "t/m", keys, partition_by=part)
+    table = io.read("t/m")
+    if partitioned:  # partition columns read back last; compare by name
+        assert _by_name(table.collect()) == _by_name(exp_rows)
+        assert got == table.filter("p = 1").count()
+    else:
+        assert table.columns == exp_cols
+        assert sorted(table.collect(), key=repr) == exp_rows
+        assert got == table.count()
+
+
+def test_ensure_rows_skips_rewrite_when_no_symbol_is_new(spark, io):
+    led = WatermarkLedger(io)
+    syms = spark.createDataFrame([(i,) for i in range(1, 4)], "symbol_id long")
+    led.ensure_rows(syms, "prices")
+    files = sorted(p.name for p in Path(io.path(led.table)).iterdir())
+    led.ensure_rows(syms, "prices")  # nothing new: the ledger is not rewritten
+    assert sorted(p.name for p in Path(io.path(led.table)).iterdir()) == files
+    led.ensure_rows(spark.createDataFrame([(4,)], "symbol_id long"), "prices")
+    assert sorted(r.symbol_id for r in led.read().collect()) == [1, 2, 3, 4]
+
+
+def test_write_counts_leave_the_session_serializable(spark, io):
+    """Counting a write must not change what the session can run
+    afterwards: a fitted LogisticRegressionModel carries the session in
+    its training summary, so its transform serializes the session, which
+    fails once an ``Observation`` has initialized the session's
+    (unserializable) ObservationManager."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.feature import VectorAssembler
+
+    io.overwrite(spark.range(5), "t/s")
+    io.upsert(spark.range(3, 8), "t/s", ["id"])
+    data = VectorAssembler(inputCols=["x"], outputCol="features").transform(
+        spark.createDataFrame([(float(i), float(i % 2)) for i in range(20)], "x double, label double")
+    )
+    model = LogisticRegression(maxIter=5).fit(data)
+    assert model.transform(data).select("probability").count() == 20
